@@ -143,9 +143,9 @@ object Checkpoints {
   /** Registers a SQL-persisted (`df.persist`) frame for release at the
     * next [[freeAll]] barrier — for operator-internal caches whose
     * consumer is the returned lazy frame, where the operator itself has
-    * no unpersist point (StagedEvaluator's stage caches). Unlike
-    * checkpoints, a freed cache only costs recomputation if the caller
-    * re-executes the frame. Returns `df` for chaining. */
+    * no unpersist point (e.g. `Graphs`' degree frames, `Reports`' side
+    * counts). Unlike checkpoints, a freed cache only costs recomputation
+    * if the caller re-executes the frame. Returns `df` for chaining. */
   def trackCache(df: DataFrame): DataFrame = {
     synchronized { trackedCaches += df }
     df

@@ -181,20 +181,17 @@ class Evaluator(val normalizeWeights: Boolean = true) {
     }
   }
 
-  /** Plan construction given pre-computed statistics — lets the staged
-    * pipeline fuse its per-stage cohort count into the same aggregation
-    * job instead of issuing separate count/isEmpty jobs. The row count
-    * (when known) also picks the ranking strategy: beyond
+  /** Plan construction given pre-computed statistics. The row count (when
+    * known) also picks the ranking strategy: beyond
     * `graft.rank.rangeThreshold` rows (default 2M) the distinct-score
     * rank's window can itself grow unbounded, so ranking switches to the
     * fully distributed prefix-sum strategy (`withCompetitionRank(scalable =
     * true)`) — identical rank values either way. */
-  private[graft] def buildResult(
+  private def buildResult(
       bids: DataFrame,
       stats: Map[String, Stats],
       includeDetails: Boolean,
-      rowCount: Option[Long],
-      sortOutput: Boolean = true
+      rowCount: Option[Long]
   ): EvaluationResult = {
     val specs = criteriaMap.toSeq
 
@@ -215,15 +212,10 @@ class Evaluator(val normalizeWeights: Boolean = true) {
     // E4: competition ranking; E5: output sort.
     val rangeThreshold = bids.sparkSession.conf
       .get("graft.rank.rangeThreshold", "2000000").toLong
-    val withRank = Ranks
+    val ranked = Ranks
       .withCompetitionRank(scored, "final_score", "ranking",
         scalable = rowCount.exists(_ > rangeThreshold))
-    // E5 output sort; the staged pipeline skips it (its joins would destroy
-    // the order anyway and it re-sorts at the end) — a full sort exchange
-    // saved per stage.
-    val ranked =
-      if (sortOutput) withRank.orderBy(col("ranking").asc_nulls_last)
-      else withRank
+      .orderBy(col("ranking").asc_nulls_last)
 
     val statsByName = specs.map { case (col_, c) => c.name -> stats(col_) }.toMap
     lastStatistics = statsByName

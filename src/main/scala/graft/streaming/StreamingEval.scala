@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.{Evaluator, StagedEvaluator}
-import graft.model.{FinalScoreMode, StageFilter, Stats}
+import graft.model.{StageFilter, Stats}
 
 /** Streaming evaluation: the reference engine is fully batch
   * (SURVEY.md §2.6 — no streaming surface), so this module is the
@@ -55,10 +55,11 @@ object StreamingEval {
     * cascade with pre-computed per-stage statistics (a completed batch
     * run's `StagedResult.statistics` — stage k's stats ARE the stage-k
     * cohort aggregates, so freezing them makes every stage a row-local
-    * projection). Emits the batch engine's stage score/detail columns,
-    * `eliminated_at_stage`, and `final_score` (both final-score modes);
-    * rows eliminated at an earlier stage get null scores for stages they
-    * never reached, exactly like the batch wide-result join.
+    * projection). It runs the batch engine's own cascade builder with the
+    * frozen stats where the batch path has live aggregates, so it emits
+    * the batch engine's stage score/detail columns, `eliminated_at_stage`,
+    * and `final_score` (both final-score modes); rows eliminated at an
+    * earlier stage get null scores for stages they never reached.
     *
     * Two batch capabilities are inherently cohort-global and stay batch-
     * only: top-N stage filters (they rank the whole cohort — passing one
@@ -87,54 +88,13 @@ object StreamingEval {
       m.getOrElse(name, m.getOrElse(column, throw new IllegalArgumentException(
         s"frozenStats('$stage') has no entry for criterion '$name' (column '$column')")))
     }
-
-    // One pass over the stage list builds every expression against the
-    // single input projection — scores masked by "not yet eliminated", the
-    // elimination marker folded stage over stage, all evaluated in ONE
-    // select (the per-stage joins of the batch engine collapse to column
-    // arithmetic once stats are literals).
-    var elim: Column = lit(null).cast("string")
-    val details = Seq.newBuilder[(String, Column)]
-    val stageScores = Seq.newBuilder[(graft.StageDefinition, Column)]
-    val n = stages.size
-    stages.zipWithIndex.foreach { case (stage, i) =>
-      val safe = staged.safeName(stage.name)
-      val alive = elim.isNull
-      val scoreExprs: Seq[(String, Column)] = stage.evaluator.criteria.map {
-        case (column, c) =>
-          s"${safe}_${c.name}" -> when(alive,
-            c.expr(col(column).cast("double"), statsFor(stage.name, column, c.name)))
-      }
-      // same combine as the batch stage engine; the mask rides inside the
-      // summands, so eliminated rows get null (≡ the batch join miss)
-      val stageScore = when(alive, Evaluator.combinedFinalScore(
-        scoreExprs, stage.evaluator.normalizeWeights, stage.evaluator.getTotalWeight))
-      details ++= scoreExprs
-      details += (s"${safe}_score" -> stageScore)
-      stageScores += stage -> stageScore
-      // P3 threshold filter (never on the last stage, like the batch); a
-      // null stage score is "neither advanced nor eliminated" and flows on
-      if (i < n - 1) stage.filter.foreach {
-        case StageFilter.ScoreThreshold(t) =>
-          elim = when(elim.isNotNull, elim)
-            .otherwise(when(coalesce(stageScore < lit(t), lit(false)), lit(stage.name)))
-        case _ => ()
-      }
+    // an unbounded cohort: never empty, and no top-N cutoff to collect
+    val c = staged.cascade(stream) { (stage, _) =>
+      (stage.evaluator.criteria.map { case (column, cr) =>
+        column -> statsFor(stage.name, column, cr.name) }.toMap, Long.MaxValue)
     }
-
-    // P7/P8 final score — same formulas as the batch result assembly
-    val finalScore: Column = staged.finalScoreMode match {
-      case FinalScoreMode.LastStage => stageScores.result().last._2
-      case FinalScoreMode.WeightedCombination =>
-        val totalWeight = stages.map(_.weight).sum
-        if (totalWeight == 0) lit(Double.NaN)
-        else stageScores.result().foldLeft(lit(0.0): Column) { case (acc, (s, c)) =>
-          acc + coalesce(nanvl(c, lit(0.0)), lit(0.0)) * lit(s.weight / totalWeight)
-        }
-    }
-    Evaluator.detailProjection(stream, details.result(), includeDetails)
-      .withColumn("eliminated_at_stage", elim)
-      .withColumn("final_score", finalScore)
+    c.df.select(staged.outputColumns(stream.columns.toSeq, c, includeDetails, ranked = false)
+      .toSeq.map { case (n, e) => e.as(n) }: _*)
   }
 
   /** Tumbling-window aggregation with late-data handling: counts + value
